@@ -23,7 +23,6 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -114,8 +113,3 @@ def embed_udf(provider: EmbeddingProvider | None = None):
             yield pd.Series(list(np.asarray(mat, dtype=np.float32)))
 
     return _embed
-
-
-def zero_vector(dim: int) -> Column:
-    """Column literal: the reference's zero-vector error fallback."""
-    return F.array_repeat(F.lit(0.0).cast("float"), dim)

@@ -84,22 +84,3 @@ def asof_join(
         *[f"{c}{suffix}" for c in value_cols],
     )
     return out
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    equi_on: list[str] | None,
-    condition,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi + range-predicate join. Always pass equi keys when they
-    exist: Catalyst then plans a hash/SMJ join with the range predicate
-    as a post-filter instead of a broadcast-nested-loop over |L|x|R|."""
-    if equi_on:
-        eq = None
-        for k in equi_on:
-            c = left[k] == right[k]
-            eq = c if eq is None else (eq & c)
-        return left.join(right, eq & condition, how)
-    return left.join(right, condition, how)

@@ -1,13 +1,12 @@
-"""Deduplication family (A18 exact + C13 near-dup extensions).
+"""Deduplication family (C13 near-dup extensions).
 
-Exact dedup re-expresses the reference's per-chunk index probe
-(``db_utils.py:133-146``) as set operations; the near-dup operators
+Exact dedup (A18, the reference's per-chunk index probe at
+``db_utils.py:133-146`` as set operations) lives in
+``operators.ingest.dedup_against_index``; the near-dup operators here
 (MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine) are the
 LLM-corpus extensions mandated by BASELINE.json.
 
 Design for 100 TB:
-- exact: one hash-partitioned aggregation on md5 — the canonical
-  map-side-combine groupBy; no driver state.
 - MinHash/LSH: signatures are per-row expressions (no shuffle); banding
   turns all-pairs comparison into an equi-join on (band, bucket-key),
   so candidate generation is a shuffle on bucket keys whose size tracks
@@ -38,29 +37,6 @@ from data_ingestion_tool_bakasura__spark.functions.text import normalize_text
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-# ---------------------------------------------------------------------------
-# exact dedup
-# ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id row per md5(text): deterministic exact dedup.
-
-    One groupBy shuffle on the hash; Catalyst plans partial (map-side)
-    min before the exchange.
-    """
-    return (
-        df.withColumn("text_hash", F.md5(_c(text_col)))
-        .groupBy("text_hash")
-        .agg(F.min(_c(id_col)).alias("keep_id"), F.count("*").alias("n_copies"))
-    )
-
-
-def anti_join_new(batch: DataFrame, index: DataFrame, key: str = "text_hash") -> DataFrame:
-    """Rows of ``batch`` whose key is absent from ``index`` (A18 probe,
-    batched). Index side pruned to the key column -> broadcast when small."""
-    return batch.join(index.select(key).distinct(), on=key, how="left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -179,31 +155,6 @@ def minhash_signatures(
     return ex.groupBy("_id").agg(
         *[F.min(F.col("_h1") + F.lit(k) * F.col("_h2")).alias(f"mh{k}") for k in range(num_hashes)]
     ).withColumnRenamed("_id", id_col)
-
-
-def lsh_band_keys(sig: Column | str, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of 'band_id:mh,mh,...' keys.
-
-    Docs sharing ANY band key are candidates; equality of a band of
-    ``rows_per_band`` minhashes ~ Jaccard^rows_per_band. The signature
-    should be a materialized column (see :func:`with_minhash`) so the
-    per-band slices reference an attribute, not a recomputed tree.
-    """
-    s = _c(sig)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat(
-            b.cast("string"),
-            F.lit(":"),
-            F.array_join(
-                F.transform(
-                    F.slice(s, b * rows_per_band + 1, F.lit(rows_per_band)),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            ),
-        ),
-    )
 
 
 def lsh_band_index(
@@ -1129,11 +1080,6 @@ def simhash_candidates(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit signatures (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 # ---------------------------------------------------------------------------

@@ -64,8 +64,11 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from data_ingestion_tool_bakasura__spark.operators.similarity import _collect_query_rows
+from data_ingestion_tool_bakasura__spark.operators.topk import grouped_topk
 
 
 def _c(col: Column | str) -> Column:
@@ -264,7 +267,9 @@ def hnsw_topk(
     :func:`hnsw_topk_indexed` over a parquet roundtrip is what
     test_hnsw pins.
     """
-    q_ids, Q = _collect_queries(queries, query_id, vec_col, "hnsw_topk")
+    q_rows = _collect_query_rows(queries, query_id, vec_col, "hnsw_topk")
+    q_ids = [r["_q"] for r in q_rows]
+    Q = np.array([r["_v"] for r in q_rows], dtype=np.float64)
 
     src = corpus.select(_c(corpus_id).alias(corpus_id), _c(vec_col).alias(vec_col))
     id_field = src.schema[corpus_id]
@@ -314,46 +319,14 @@ def hnsw_topk(
 
         shard_hits = src.mapInPandas(_shard_search, schema=out_schema)
 
-    return _merge_shard_hits(shard_hits, query_id, corpus_id, k)
+    return grouped_topk(
+        shard_hits, [query_id], [F.desc("cos_sim"), F.col(corpus_id)], k
+    ).drop("rnk")
 
 
 # ---------------------------------------------------------------------------
 # persisted shard index (build once, query many) — r7 verdict #4
 # ---------------------------------------------------------------------------
-
-
-def _collect_queries(queries: DataFrame, query_id: str, vec_col: str, who: str):
-    """Driver-side query collect, bounded by the same contract (and the
-    same guard) as the ADC paths: beam search broadcasts the query
-    matrix, so an unbounded query DataFrame must raise with a pointer
-    to the join-based paths, not OOM the driver (r9 verdict #6)."""
-    from data_ingestion_tool_bakasura__spark.operators.similarity import (
-        MAX_DRIVER_QUERIES,
-    )
-
-    q_rows = (
-        queries.select(_c(query_id).alias("q"), _c(vec_col).alias("v"))
-        .limit(MAX_DRIVER_QUERIES + 1)
-        .collect()
-    )
-    if not q_rows:
-        raise ValueError(f"{who}: query set is empty")
-    if len(q_rows) > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"{who}: query set exceeds max_queries={MAX_DRIVER_QUERIES}; "
-            "queries are collected driver-side by contract — for unbounded "
-            "query sets use the join-based lsh_ann_topk or cosine_topk_batch"
-        )
-    return [r["q"] for r in q_rows], np.array([r["v"] for r in q_rows], dtype=np.float64)
-
-
-def _merge_shard_hits(shard_hits: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id))
-    return (
-        shard_hits.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def _shard_expr(corpus_id: str, n_shards: int) -> Column:
@@ -696,7 +669,9 @@ def hnsw_topk_indexed(
     with the SAME m/ef_construction the caller tuned for; ``ef_search``
     stays a query-time recall dial. Answers are identical to
     ``hnsw_topk(corpus, ..., n_shards=<build n_shards>)``."""
-    q_ids, Q = _collect_queries(queries, query_id, vec_col, "hnsw_topk_indexed")
+    q_rows = _collect_query_rows(queries, query_id, vec_col, "hnsw_topk_indexed")
+    q_ids = [r["_q"] for r in q_rows]
+    Q = np.array([r["_v"] for r in q_rows], dtype=np.float64)
     id_t = index.schema[corpus_id].dataType.simpleString()
     q_t = queries.schema[query_id].dataType.simpleString()
     out_schema = f"{query_id} {q_t}, {corpus_id} {id_t}, cos_sim double"
@@ -712,4 +687,6 @@ def hnsw_topk_indexed(
         return pd.DataFrame({query_id: out_q, corpus_id: out_id, "cos_sim": out_s})
 
     shard_hits = index.groupBy("shard").applyInPandas(_search, schema=out_schema)
-    return _merge_shard_hits(shard_hits, query_id, corpus_id, k)
+    return grouped_topk(
+        shard_hits, [query_id], [F.desc("cos_sim"), F.col(corpus_id)], k
+    ).drop("rnk")

@@ -239,17 +239,3 @@ def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
     """ORC source (built-in, columnar): same pushdown/pruning contract
     as parquet — predicates and column selection reach the scan."""
     return spark.read.options(**options).orc(path)
-
-
-def read_stream_rate(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic stream source for tests (`rate` format)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
-
-
-def read_stream_parquet(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-stream source over a parquet directory (requires schema)."""
-    return spark.readStream.schema(schema).parquet(path)

@@ -1,24 +1,47 @@
-"""Incremental document ingest: the streaming form of ``operators.ingest``.
+"""Streaming sinks: the incremental forms of ingest, upsert, dedup and crawl.
 
 Reference parity: the reference re-ingests by a human re-uploading
-files through Streamlit (``main.py:226-263``); its dedup probe
+files through Streamlit (``main.py:226-263``); its one write path is a
+dedup-checked upload (``db_utils.py:54,169``) whose probe
 (``db_utils.py:133-146``) is a non-atomic per-chunk HTTP check. Here the
-arrival of new files IS the stream: a file source feeds the same lazy
-chunk->hash->embed transforms, and `foreachBatch` gives the transactional
-per-micro-batch boundary where dedup-against-the-index and the bulk
-append happen atomically per batch.
+arrival of new files IS the stream: each ``start_*`` function feeds a
+file source through the same lazy transforms as its batch operator, and
+`foreachBatch` gives the per-micro-batch boundary where the probe
+against the persisted tables and the appends happen.
 
 Scale notes:
-- the chunk/hash/embed stages are stateless -> no streaming state at
-  all; only the sink-side anti-join touches the index, and it reads the
-  index's `text_hash` column only (column-pruned scan, broadcast-able).
-- per micro-batch the work is identical to the batch pipeline, so the
-  100 TB design notes in ``operators.ingest`` carry over; backlog
-  catch-up is governed by maxFilesPerTrigger / availableNow.
-- exactly-once: file source + checkpoint gives exactly-once *input*
-  processing; the parquet append in foreachBatch is idempotent w.r.t.
-  replays only because the anti-join drops already-indexed hashes —
-  the same dedup that the reference does racily, done atomically.
+- the per-batch transforms are stateless -> no streaming state at all;
+  only the sink-side guards and probes read the persisted tables, and
+  they read the id/key columns only (column-pruned scans).
+- per micro-batch the work is identical to the batch operators, so the
+  100 TB design notes in ``operators.ingest`` / ``operators.dedup``
+  carry over; backlog catch-up is governed by maxFilesPerTrigger /
+  availableNow.
+
+Commit protocol. The file source + checkpoint gives exactly-once INPUT
+processing; a micro-batch that crashes before its offsets commit is
+replayed, so every sink keeps its appends idempotent under replay. The
+dedup sinks open with an exact-id guard (:func:`_unseen`) against one of
+their own tables and order their two appends so that a crash between
+them (``CRASH_HOOK`` names each edge) never double-writes output:
+
+- id-keyed dedup sinks (near, image, video — :func:`_id_keyed_dedup_sink`)
+  write the INDEX first, then the corpus: orphan index rows are id-keyed,
+  so the replay passes the corpus guard and the index append's
+  anti-join skips them, while corpus-first would lose the survivors'
+  index rows forever (the guard empties the replayed batch).
+- span dedup writes the CLEANED rows first, then the gram index: the
+  gram index is id-less, so index-first would make a replay cut every
+  span against its own grams; the residual is one batch of novel grams
+  left unindexed, never corrupt output.
+- semantic dedup writes DECISIONS first, then the index: the guard
+  reads the index, so index-first would lose the batch's decisions (its
+  output); replayed decisions are anti-joined by id before the append.
+
+Ingest and upsert have one write target whose own guard (the hash
+anti-join, the key merge) makes a replay idempotent; the crawl orders
+its side effects (archive, link graph, bloom) before its corpus append,
+each with its own replay guard (see its docstring).
 """
 
 from __future__ import annotations
@@ -26,7 +49,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from data_ingestion_tool_bakasura__spark.session import reliable_checkpoint
 from data_ingestion_tool_bakasura__spark.operators.ingest import (
@@ -53,16 +77,17 @@ def _audit(name: str, df: DataFrame) -> None:
         BATCH_AUDIT_HOOK(name, df)
 
 
-#: r15 (r14 verdict #3) — crash-point injection seam for the streaming
-#: crawl sink's ordering contract. The sink performs up to five durable
+#: r15 (r14 verdict #3) — crash-point injection seam for the sinks'
+#: write-ordering contracts. The crawl performs up to five durable
 #: effects per micro-batch (archive publish, link-graph fold, ranks
-#: swap, bloom write, corpus append) whose ORDER is the crash-safety
-#: argument; the r14 review found ordering bugs one at a time, so the
-#: edges are now enumerable: when set, the sink calls the hook with a
-#: named point right after that step's effect lands, and a test raises
-#: from inside to simulate a driver crash at exactly that edge before
-#: the checkpoint commits. ``None`` in production — the cost is one
-#: truthiness check per point per micro-batch.
+#: swap, bloom write, corpus append) and each dedup sink two appends,
+#: whose ORDER is the crash-safety argument; the r14 review found
+#: ordering bugs one at a time, so the edges are now enumerable: when
+#: set, a sink calls the hook with a named point right after that
+#: step's effect lands, and a test raises from inside to simulate a
+#: driver crash at exactly that edge before the checkpoint commits.
+#: ``None`` in production — the cost is one truthiness check per point
+#: per micro-batch.
 CRASH_HOOK = None
 
 
@@ -122,7 +147,6 @@ def _run_token(checkpoint: str) -> str:
     checkpoint keeps the same keys (replay guards hold) while a wiped
     or fresh checkpoint gets fresh keys (new pages re-archive under new
     names — duplicate capture records, never silent omission)."""
-    import os
     import uuid
 
     os.makedirs(checkpoint, exist_ok=True)
@@ -136,6 +160,80 @@ def _run_token(checkpoint: str) -> str:
         f.write(tok)
     os.replace(tmp, tok_path)
     return tok
+
+
+def _start(stream: DataFrame, sink, checkpoint: str, available_now: bool):
+    """Start ``stream`` into the ``foreachBatch`` ``sink`` under
+    ``checkpoint``; ``available_now`` drains the backlog and stops."""
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _unseen(batch_df: DataFrame, path: str, id_col: str) -> DataFrame | None:
+    """The exact-id replay guard: drop the rows whose ``id_col`` already
+    landed in the table at ``path`` and materialize the rest (every sink
+    later appends to a table its plan reads). ``None`` when nothing is
+    left, so the sink returns without touching any table."""
+    if _has_table(path):
+        seen = batch_df.sparkSession.read.parquet(path).select(F.col(id_col))
+        batch_df = batch_df.join(seen, on=id_col, how="left_anti")
+    batch_df = batch_df.transform(reliable_checkpoint)
+    return batch_df if batch_df.take(1) else None
+
+
+def _id_keyed_dedup_sink(
+    name: str, corpus_path: str, index_path: str, id_col: str, index_id: str,
+    hash_batch, probe,
+):
+    """The ``foreachBatch`` sink shared by the near/image/video dedup
+    streams: exact-id guard against the corpus, hash the batch ONCE,
+    probe, then append the survivors' index rows FIRST and their corpus
+    rows LAST (see the module docstring for why that order).
+
+    ``hash_batch(batch)`` returns the batch's index rows, keyed by
+    ``index_id``. ``probe(batch, keys, index)`` returns the batch ids to
+    drop (one ``id_col`` column), given those keys and the persisted
+    index (the batch's own zero-row keys before the first batch, so
+    the index schema always follows the ids' type). Crash points are
+    ``<name without underscores>_index_written`` / ``_corpus_appended``.
+    """
+    crash = name.replace("_", "")
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = _unseen(batch_df, corpus_path, id_col)
+        if batch_df is None:
+            return
+        keys = hash_batch(batch_df).transform(reliable_checkpoint)
+        have_index = _has_table(index_path)
+        index = (
+            batch_df.sparkSession.read.parquet(index_path)
+            if have_index else keys.limit(0)
+        )
+        drop = probe(batch_df, keys, index)
+        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
+        to_index = keys.join(
+            F.broadcast(drop.select(F.col(id_col).alias(index_id))),
+            on=index_id, how="left_anti",
+        )
+        if have_index:
+            # against the UNFILTERED index: rows a crashed attempt already
+            # appended must not land twice
+            to_index = to_index.join(
+                index.select(index_id).distinct(), on=index_id, how="left_anti"
+            )
+        _audit(name, survivors)
+        # materialize: the append plan must not lazily read index_path
+        # while appending to it
+        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
+        _crash_point(f"{crash}_index_written")
+        survivors.write.mode("append").parquet(corpus_path)
+        _crash_point(f"{crash}_corpus_appended")
+
+    return _sink
 
 
 def start_incremental_ingest(
@@ -174,12 +272,7 @@ def start_incremental_ingest(
         _audit("incremental_ingest", rows)
         rows.write.mode("append").parquet(index_path)
 
-    writer = docs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_upsert(
@@ -216,6 +309,7 @@ def start_streaming_upsert(
     the 100 TB form of this sink (r6 verdict #7).
     """
     from data_ingestion_tool_bakasura__spark.operators.upsert import (
+        elect_winners,
         upsert_into_path,
     )
 
@@ -225,22 +319,13 @@ def start_streaming_upsert(
         if BATCH_AUDIT_HOOK is not None:
             # audit the election half (the merge's shuffle shape);
             # the MERGE/swap itself happens inside upsert_into_path
-            from data_ingestion_tool_bakasura__spark.operators.upsert import (
-                elect_winners,
-            )
-
             _audit("streaming_upsert",
                    elect_winners(batch_df, key=key, order_by=order_by))
         upsert_into_path(
             batch_df.sparkSession, table_path, batch_df, key=key, order_by=order_by
         )
 
-    writer = updates_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(updates_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_near_dedup(
@@ -273,23 +358,11 @@ def start_streaming_near_dedup(
     dropping if exact verification is required.
 
     Replay-idempotent by exact id: each batch is first anti-joined
-    against the corpus on ``id_col``, so a fully-landed micro-batch
-    replayed after a crash contributes no second copy of an
-    already-indexed doc. The LSH near-dup check alone would NOT catch
-    this — a replayed doc does not near-duplicate its own first
-    delivery (its orphan index rows are excluded from the probe). The
-    guard is one column-pruned scan of corpus ids per batch, the same
-    order of work as the band-index probe itself.
-    Residual window (r15 reorder — the image/video closures' crash
-    argument): the INDEX appends first, so a crash between the two
-    writes leaves orphan band keys whose docs are missing from the
-    corpus; the replayed batch passes the corpus guard, its own orphan
-    rows are dropped from the probe index (no double-counting against
-    the bucket cap, no self-pairs), it recomputes the same drop set,
-    lands the corpus rows, and the index anti-join prevents a second
-    key append. The OLD corpus-first order lost the survivors' band
-    keys forever on that crash — every future near-dup of those docs
-    went undetected.
+    against the corpus on ``id_col`` — the LSH check alone would not
+    catch a replayed doc, which does not near-duplicate its own first
+    delivery. Writes follow the id-keyed commit protocol (module
+    docstring); crash points ``neardedup_index_written`` /
+    ``neardedup_corpus_appended``.
     """
     from data_ingestion_tool_bakasura__spark.operators.dedup import (
         lsh_band_index,
@@ -300,53 +373,20 @@ def start_streaming_near_dedup(
     _local_or_raise(corpus_path, "start_streaming_near_dedup corpus_path")
     _local_or_raise(index_path, "start_streaming_near_dedup index_path")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        # exact-id replay guard: docs already in the corpus (a replayed
-        # micro-batch after crash/restart) are dropped up front — the
-        # near-dup check below can't do this, it ignores self-id pairs
-        if _has_table(corpus_path):
-            indexed = spark.read.parquet(corpus_path).select(F.col(id_col))
-            batch_df = batch_df.join(indexed, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
-            return
-        # Hash the batch ONCE: these uncapped band keys feed both the
-        # near-dup probe (which applies the bucket cap internally) and,
-        # filtered to survivors, the index append — without this the
-        # MinHash pass over the batch text ran twice per micro-batch.
-        batch_keys = lsh_band_index(
-            batch_df, text_col, id_col, num_hashes, bands, shingle_n
-        ).transform(reliable_checkpoint)
-        have_index = _has_table(index_path)
-        # first batch: the empty index derives its schema from the
-        # batch's OWN keys (r14-late review — the hardcoded
-        # '_id long' form broke string ids under ANSI type checks)
-        raw_index = (
-            spark.read.parquet(index_path)
-            if have_index
-            else batch_keys.limit(0)
-        )
-        # drop the batch's OWN orphan rows from the probe index (r15
-        # review, the image closure's discipline): a replay after a
-        # crash at neardedup_index_written otherwise counts each
-        # already-indexed survivor on BOTH sides of the bucket cap —
-        # a bucket at exactly max_bucket_size flips over the cap, its
-        # pairs are silently skipped, and the first attempt's dup docs
-        # (whose drop never persisted) land permanently. Also makes
-        # self-pairs structurally impossible rather than filtered.
-        index = raw_index.join(
-            batch_df.select(F.col(id_col).alias("_id")),
-            on="_id", how="left_anti",
+    def _probe(batch_df: DataFrame, keys: DataFrame, index: DataFrame) -> DataFrame:
+        # drop the batch's OWN orphan rows from the probe index: a replay
+        # after a crash at neardedup_index_written otherwise counts each
+        # already-indexed survivor on BOTH sides of the bucket cap — a
+        # bucket at exactly max_bucket_size flips over the cap, its pairs
+        # are silently skipped, and the first attempt's dup docs (whose
+        # drop never persisted) land permanently. Also makes self-pairs
+        # structurally impossible rather than filtered.
+        index = index.join(
+            batch_df.select(F.col(id_col).alias("_id")), on="_id", how="left_anti"
         )
         pairs = minhash_lsh_increment(
             batch_df, index, text_col, id_col,
-            num_hashes, bands, shingle_n, max_bucket_size,
-            new_keyed=batch_keys,
+            num_hashes, bands, shingle_n, max_bucket_size, new_keyed=keys,
         ).transform(reliable_checkpoint)
         new_ids = batch_df.select(F.col(id_col))
         # drop: any new doc paired with a CORPUS doc (id not in batch),
@@ -363,46 +403,15 @@ def start_streaming_near_dedup(
             new_ids.select(F.col(id_col).alias("id_a")), on="id_a", how="left_semi"
         ).join(new_ids.select(F.col(id_col).alias("id_b")), on="id_b", how="left_semi")
         dup_in_batch = both_new.select(F.greatest("id_a", "id_b").alias(id_col))
-        drop = dup_vs_corpus.unionByName(dup_in_batch).distinct()
-        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
-        # index append FIRST — the image/video closures' crash-ordering
-        # argument verbatim (r9 ADVICE there; this sink adopted it r15):
-        # a crash between the two writes leaves band keys whose ids are
-        # missing from the corpus; the replayed batch survives the
-        # corpus-id guard above, self-id pairs are ignored by the
-        # probe, and the anti-join below reconciles without
-        # double-indexing. Corpus-first had the opposite failure: the
-        # corpus-id guard empties the replayed batch and the survivors'
-        # band keys are LOST FOREVER — every future near-dup of those
-        # docs undetected.
-        # survivors' index rows = the already-computed batch keys minus
-        # the dropped docs (no second MinHash pass over the text)
-        to_index = batch_keys.join(
-            F.broadcast(drop.select(F.col(id_col).alias("_id"))),
-            on="_id",
-            how="left_anti",
-        )
-        if have_index:
-            # guard against the UNFILTERED index: the orphan rows the
-            # probe filter excluded are exactly the ones a replay must
-            # not append twice
-            to_index = to_index.join(
-                raw_index.select("_id").distinct(), on="_id", how="left_anti"
-            )
-        # materialize: the append plan must not lazily read index_path
-        # while appending to it
-        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
-        _crash_point("neardedup_index_written")
-        _audit("near_dedup", survivors)
-        survivors.write.mode("append").parquet(corpus_path)
-        _crash_point("neardedup_corpus_appended")
+        return dup_vs_corpus.unionByName(dup_in_batch).distinct()
 
-    writer = docs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    _sink = _id_keyed_dedup_sink(
+        "near_dedup", corpus_path, index_path, id_col, "_id",
+        # uncapped band keys: the probe applies the bucket cap itself
+        lambda b: lsh_band_index(b, text_col, id_col, num_hashes, bands, shingle_n),
+        _probe,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_semantic_dedup(
@@ -430,25 +439,16 @@ def start_streaming_semantic_dedup(
     dropped — because a SemDeDup witness need not itself survive.
 
     Replay-idempotent by exact id: the batch is anti-joined against
-    the index ids first, so a replayed micro-batch (crash between the
-    two appends) contributes no duplicate decisions or index rows.
-    The decisions append reconciles itself too (r15 ADVICE): a crash
-    between the decisions append and the index append replays the
-    batch with decisions already recorded — the replay guard keys on
-    the INDEX (appended last) so the batch recomputes, but its
-    (deterministic) decision rows are anti-joined against
-    ``decisions_path`` by id before the append, so nothing lands
-    twice. Consumers read exactly-one decision per id.
+    the index ids first, and the decisions are written first (module
+    docstring) and anti-joined against ``decisions_path`` by id, so a
+    crash at either edge (``semdedup_decisions_appended`` /
+    ``semdedup_index_appended``) replays to exactly one decision per id.
 
     Scale: the corpus is never re-compared; a year of daily
     increments costs a year of assignments + cluster-local GEMMs.
     Centroids are fit once offline (kmeans on a sample — see
     ``kmeans_centroids``), exactly SemDeDup's serving shape.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from data_ingestion_tool_bakasura__spark.operators.dedup import (
         semantic_dedup_increment,
     )
@@ -460,12 +460,8 @@ def start_streaming_semantic_dedup(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        have_index = _has_table(index_path)
-        if have_index:
-            seen = spark.read.parquet(index_path).select(F.col(id_col))
-            batch_df = batch_df.join(seen, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
+        batch_df = _unseen(batch_df, index_path, id_col)
+        if batch_df is None:
             return
         # assign ONCE: these rows feed both the probe and the index append
         assigned = ivf_assign(
@@ -473,22 +469,17 @@ def start_streaming_semantic_dedup(
         ).transform(reliable_checkpoint)
         index = (
             spark.read.parquet(index_path)
-            if have_index
-            else assigned.limit(0)
+            if _has_table(index_path) else assigned.limit(0)
         )
         decisions = semantic_dedup_increment(
             batch_df, index, centroids, eps,
             id_col=id_col, vec_col=vec_col, round_dp=round_dp,
             new_assigned=assigned,
         )
-        # decisions FIRST is deliberate (r15 ordering sweep): the
-        # replay guard reads the INDEX, so index-first would empty the
-        # replayed batch and the batch's decisions (the sink's OUTPUT)
-        # would never be written at all. The replay's duplicate
-        # decision rows are reconciled here instead (r16, r15 ADVICE):
-        # the recompute is deterministic (static centroids, index
-        # unchanged by the crashed attempt), so an anti-join by id
-        # against what already landed makes the append idempotent.
+        # a replay after a crash between the two appends recomputes the
+        # same decisions (static centroids, index unchanged by the
+        # crashed attempt), so an anti-join by id against what already
+        # landed makes the decisions append idempotent
         if _has_table(decisions_path):
             prior = spark.read.parquet(decisions_path).select(F.col(id_col))
             decisions = decisions.join(prior, on=id_col, how="left_anti")
@@ -501,12 +492,7 @@ def start_streaming_semantic_dedup(
         assigned.write.mode("append").parquet(index_path)
         _crash_point("semdedup_index_appended")
 
-    writer = vecs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(vecs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_span_dedup(
@@ -531,24 +517,13 @@ def start_streaming_span_dedup(
     still caught. Corpus text is never re-tokenized; the index grows
     8 bytes per distinct gram.
 
-    Replay-idempotent by exact id against the CLEANED table (appended
-    FIRST): a replayed micro-batch is dropped before probing. The
-    index append goes LAST because the opposite order is the dangerous
-    one — with the index landing first, a crash before the cleaned
-    append would replay the batch with its own grams already indexed,
-    and its spans would cut against themselves. The residual window of
-    the actual order (cleaned landed, index not) merely leaves the
-    batch's novel grams unindexed for future batches — bounded, never
-    output-corrupting. NOTE this is the OPPOSITE order from the
-    LSH/image/video sinks (r15): those indexes are id-keyed, so
-    index-first is replay-safe there and corpus-first would lose the
-    keys; this gram index is id-LESS, so index-first would self-poison
-    and cleaned-first is the only safe order.
+    Replay-idempotent by exact id against the CLEANED table, which is
+    appended FIRST (module docstring: the id-less gram index would
+    self-poison a replay if it landed first). A crash at
+    ``spandedup_cleaned_appended`` leaves that batch's novel grams
+    unindexed for future batches; one at ``spandedup_index_appended``
+    loses nothing.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from data_ingestion_tool_bakasura__spark.operators.dedup import (
         remove_repeated_spans_increment,
         span_gram_index,
@@ -560,17 +535,12 @@ def start_streaming_span_dedup(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _has_table(cleaned_path):
-            done = spark.read.parquet(cleaned_path).select(F.col(id_col))
-            batch_df = batch_df.join(done, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
+        batch_df = _unseen(batch_df, cleaned_path, id_col)
+        if batch_df is None:
             return
-        have_index = _has_table(index_path)
         index = (
             spark.read.parquet(index_path)
-            if have_index
-            else spark.createDataFrame([], "gh long")
+            if _has_table(index_path) else spark.createDataFrame([], "gh long")
         )
         cleaned = remove_repeated_spans_increment(
             batch_df, index, n=n, text_col=text_col, id_col=id_col
@@ -581,24 +551,13 @@ def start_streaming_span_dedup(
         new_grams = new_grams.join(
             index.select(F.col("gh")), on="gh", how="left_anti"
         ).transform(reliable_checkpoint)
-        # cleaned FIRST is deliberate here, unlike the LSH/image/video
-        # closures (r15 ordering sweep): the gram index is id-LESS
-        # (distinct gh hashes), so index-first would SELF-POISON a
-        # replay — the batch's own pre-surgery grams would count as
-        # "ever seen" and every span of the replayed docs would be cut.
-        # The cost of cleaned-first is bounded: a crash between the two
-        # appends loses ONE batch's new grams (future repeats of those
-        # spans go undetected), never corrupts output.
         _audit("span_dedup", cleaned)
         cleaned.write.mode("append").parquet(cleaned_path)
+        _crash_point("spandedup_cleaned_appended")
         new_grams.write.mode("append").parquet(index_path)
+        _crash_point("spandedup_index_appended")
 
-    writer = docs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs_stream, _sink, checkpoint, available_now)
 
 
 __all__ = [
@@ -637,12 +596,11 @@ def start_streaming_image_dedup(
     the corpus side contributes only its hash rows, so a year of
     daily media drops costs a year of increments.
 
-    Replay-idempotent twice over: an exact-id guard anti-joins the
-    batch against corpus ids up front (a replayed micro-batch after a
-    crash between the two appends contributes nothing), and the
-    increment itself drops wave ids already present in the hash index.
-    The oversized-band boilerplate cap applies per batch over
-    index+wave combined populations.
+    Replay-idempotent by exact id against the corpus, and the
+    increment itself drops wave ids already present in the hash index;
+    writes follow the id-keyed commit protocol (module docstring). The
+    oversized-band boilerplate cap applies per batch over index+wave
+    combined populations.
     """
     from data_ingestion_tool_bakasura__spark.multimodal.media import (
         image_hash_index,
@@ -653,67 +611,22 @@ def start_streaming_image_dedup(
     _local_or_raise(corpus_path, "start_streaming_image_dedup corpus_path")
     _local_or_raise(index_path, "start_streaming_image_dedup index_path")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        if _has_table(corpus_path):
-            seen = spark.read.parquet(corpus_path).select(F.col(id_col))
-            batch_df = batch_df.join(seen, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
-            return
-        # hash the batch ONCE: feeds the near-dup probe AND (filtered
-        # to survivors) the index append
-        batch_h = image_hash_index(
-            batch_df, id_col=id_col, payload_col=payload_col
-        ).transform(reliable_checkpoint)
-        have_index = _has_table(index_path)
-        index = (
-            spark.read.parquet(index_path)
-            if have_index
-            else batch_h.limit(0)
-        )
+    def _probe(batch_df: DataFrame, keys: DataFrame, index: DataFrame) -> DataFrame:
         pairs = image_near_dup_increment(
             index, batch_df, id_col=id_col, payload_col=payload_col,
             bands=bands, max_hamming=max_hamming,
-            max_bucket_size=max_bucket_size, new_hashes=batch_h,
+            max_bucket_size=max_bucket_size, new_hashes=keys,
         )
         # id_b is always the duplicate side (index witness or larger
         # within-batch id), so the drop set is exactly the id_b column
-        drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
-        # write ORDER matters for replay (r9 ADVICE): the index append
-        # goes FIRST. A crash between the two writes then leaves hash
-        # rows whose ids are missing from the corpus; the replayed
-        # batch survives the corpus-id guard above and the anti-join
-        # below reconciles the corpus side without double-indexing.
-        # (Corpus-first had the opposite failure: the corpus-id guard
-        # skips the replayed batch and the survivors' hash rows are
-        # lost forever — future near-dups of those images undetected.)
-        to_index = batch_h.withColumnRenamed("media_id", id_col).join(
-            F.broadcast(drop), on=id_col, how="left_anti"
-        ).withColumnRenamed(id_col, "media_id")
-        if have_index:
-            to_index = to_index.join(
-                index.select("media_id"), on="media_id", how="left_anti"
-            )
-        _audit("image_dedup", survivors)
-        # materialize: the append plan must not lazily read index_path
-        # while appending to it
-        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
-        _crash_point("imagededup_index_written")
-        survivors.write.mode("append").parquet(corpus_path)
-        _crash_point("imagededup_corpus_appended")
+        return pairs.select(F.col("id_b").alias(id_col)).distinct()
 
-    writer = media_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    _sink = _id_keyed_dedup_sink(
+        "image_dedup", corpus_path, index_path, id_col, "media_id",
+        lambda b: image_hash_index(b, id_col=id_col, payload_col=payload_col),
+        _probe,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(media_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_video_dedup(
@@ -739,12 +652,9 @@ def start_streaming_video_dedup(
     ``id_b`` always the duplicate side); across batches first arrival
     wins. Videos are sampled + hashed exactly once per video, ever.
 
-    Same replay/crash contracts as the image closure: exact-id guard
-    against corpus ids up front; the increment drops wave ids already
-    in the fingerprint index; the INDEX append goes first so a crash
-    between the two writes leaves reconcilable orphan fingerprints,
-    never silently-unindexed survivors; the hot-frame boilerplate cap
-    applies per batch over index+wave combined populations."""
+    Same replay contracts as the image closure; the hot-frame
+    boilerplate cap applies per batch over index+wave combined
+    populations."""
     from data_ingestion_tool_bakasura__spark.multimodal.media import (
         video_fingerprint_index,
         video_near_dup_increment,
@@ -754,60 +664,22 @@ def start_streaming_video_dedup(
     _local_or_raise(corpus_path, "start_streaming_video_dedup corpus_path")
     _local_or_raise(index_path, "start_streaming_video_dedup index_path")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        if _has_table(corpus_path):
-            seen = spark.read.parquet(corpus_path).select(F.col(id_col))
-            batch_df = batch_df.join(seen, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
-            return
-        # sample + hash the batch ONCE: feeds the near-dup probe AND
-        # (filtered to survivors) the index append
-        batch_fp = video_fingerprint_index(
-            batch_df, id_col=id_col, media_col=media_col, every_k=every_k
-        ).transform(reliable_checkpoint)
-        have_index = _has_table(index_path)
-        index = (
-            spark.read.parquet(index_path) if have_index else batch_fp.limit(0)
-        )
+    def _probe(batch_df: DataFrame, keys: DataFrame, index: DataFrame) -> DataFrame:
         pairs = video_near_dup_increment(
             index, batch_df, id_col=id_col, media_col=media_col,
             every_k=every_k, min_jaccard=min_jaccard,
-            max_videos_per_frame=max_videos_per_frame,
-            new_fingerprints=batch_fp,
+            max_videos_per_frame=max_videos_per_frame, new_fingerprints=keys,
         )
-        drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
-        # index append FIRST — the image closure's crash-ordering
-        # argument verbatim (orphan fingerprints reconcile on replay;
-        # corpus-first would lose survivors' fingerprints forever)
-        to_index = batch_fp.withColumnRenamed("video_id", id_col).join(
-            F.broadcast(drop), on=id_col, how="left_anti"
-        ).withColumnRenamed(id_col, "video_id")
-        if have_index:
-            to_index = to_index.join(
-                index.select("video_id").distinct(),
-                on="video_id", how="left_anti",
-            )
-        _audit("video_dedup", survivors)
-        # materialize: the append plan must not lazily read index_path
-        # while appending to it
-        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
-        _crash_point("videodedup_index_written")
-        survivors.write.mode("append").parquet(corpus_path)
-        _crash_point("videodedup_corpus_appended")
+        return pairs.select(F.col("id_b").alias(id_col)).distinct()
 
-    writer = media_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
+    _sink = _id_keyed_dedup_sink(
+        "video_dedup", corpus_path, index_path, id_col, "video_id",
+        lambda b: video_fingerprint_index(
+            b, id_col=id_col, media_col=media_col, every_k=every_k
+        ),
+        _probe,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(media_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_crawl(
@@ -1044,14 +916,11 @@ def start_streaming_crawl(
 
         if bloom_holder:
             return bloom_holder[0]
-        import os
-
         path = corpus_path.removeprefix("file://") + "_bloom"
         kw = dict(seen_bloom) if isinstance(seen_bloom, dict) else {}
-        have_corpus = _has_table(corpus_path)
         landed = (
             spark.read.parquet(corpus_path).select("norm_url")
-            if have_corpus else None
+            if _has_table(corpus_path) else None
         )
         if landed is not None:
             kw.setdefault("n_expected", max(1_000_000, 2 * landed.count()))
@@ -1070,16 +939,13 @@ def start_streaming_crawl(
         return b
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
         from data_ingestion_tool_bakasura__spark.operators.maintenance import (
+            compact,
             recover_swap,
+            swap_directory,
         )
 
+        spark = batch_df.sparkSession
         # un-wedge a crash between a prior swap's two renames BEFORE any
         # exists-check or read (r14-late review): the corpus seen-guard
         # would otherwise treat the displaced table as absent, recreate
@@ -1096,17 +962,13 @@ def start_streaming_crawl(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        corpus_exists = _has_table(corpus_path)
+        seen = (
+            spark.read.parquet(corpus_path).select("norm_url")
+            if _has_table(corpus_path) else None
+        )
         if seen_bloom:
-            corpus_urls = (
-                spark.read.parquet(corpus_path).select("norm_url")
-                if corpus_exists else None
-            )
-            batch = _bloom(spark).guard_anti_join(
-                batch, "norm_url", corpus_urls
-            )
-        elif corpus_exists:
-            seen = spark.read.parquet(corpus_path).select("norm_url")
+            batch = _bloom(spark).guard_anti_join(batch, "norm_url", seen)
+        elif seen is not None:
             batch = batch.join(seen, on="norm_url", how="left_anti")
         if blocked_domains:
             batch = CR.domain_blocklist_filter(batch, blocked_domains, url_col)
@@ -1299,10 +1161,6 @@ def start_streaming_crawl(
                 _crash_point("graph_folded")
                 if (ranks_refresh_every and host_ranks_path
                         and batch_id % ranks_refresh_every == 0):
-                    from data_ingestion_tool_bakasura__spark.operators.maintenance import (
-                        swap_directory,
-                    )
-
                     # pagerank persists its edge/nodes/transition/contribs
                     # frames; this loop re-ranks every N batches for the
                     # stream's lifetime, so release them once the write
@@ -1340,10 +1198,6 @@ def start_streaming_crawl(
             if (compact_every and batch_id > 0
                     and batch_id % compact_every == 0
                     and _has_table(corpus_path)):
-                from data_ingestion_tool_bakasura__spark.operators.maintenance import (
-                    compact,
-                )
-
                 # layout-only rewrite AFTER the append (a crash here loses
                 # nothing: rows are already durable; the swap restores on
                 # failure). Runs inside foreachBatch, so no reader races
@@ -1356,9 +1210,4 @@ def start_streaming_crawl(
                 # has landed — or the attempt failed
                 archived_batch.unpersist()
 
-    writer = pages_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pages_stream, _sink, checkpoint, available_now)

@@ -1300,3 +1300,60 @@ def test_streaming_semantic_dedup_crash_between_writes_loses_nothing(
     idx = spark.read.parquet(index)
     assert idx.count() == 4
     assert {r["vec_id"] for r in idx.collect()} == {1, 2, 4, 5}
+
+
+@_pt.mark.parametrize(
+    "point", ["spandedup_cleaned_appended", "spandedup_index_appended"])
+def test_streaming_span_dedup_crash_between_writes_loses_nothing(
+        spark, tmp_path, point):
+    """The span sink appends cleaned rows FIRST (its gram index is
+    id-less, so an index-first replay would cut every span against its
+    own grams). A crash at either edge replays to exactly one cleaned
+    row per doc with no self-cut. The documented residual is pinned
+    too: after a crash at the cleaned edge the replayed batch is empty,
+    so its novel grams never reach the index and a later doc repeating
+    them is not cut; after a crash at the index edge nothing is lost."""
+    run = "s1 s2 s3 s4 s5"
+    wave1 = [(1, f"head {run} tail"), (2, "nothing shared at all here")]
+    wave2 = [(3, f"pre {run} post")]
+    landing = str(tmp_path / "landing")
+    cleaned = str(tmp_path / "cleaned")
+    index = str(tmp_path / "index")
+
+    def land(rows):
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)\
+            .write.mode("append").parquet(landing)
+
+    def run_once():
+        SP.start_streaming_span_dedup(
+            SP.stream_documents(spark, landing, spark.read.parquet(landing).schema),
+            cleaned, index, n=5, checkpoint=str(tmp_path / "ckpt"),
+        ).awaitTermination(120)
+
+    def crash(name: str) -> None:
+        if name == point:
+            raise RuntimeError(f"injected crash at {name}")
+
+    land(wave1)
+    SP.CRASH_HOOK = crash
+    try:
+        with _pt.raises(Exception, match="injected crash"):
+            run_once()
+    finally:
+        SP.CRASH_HOOK = None
+    run_once()  # replay: the cleaned-table guard empties the batch
+    land(wave2)
+    run_once()
+
+    out = spark.read.parquet(cleaned)
+    per_id = {r["doc_id"]: r["count"] for r in out.groupBy("doc_id").count().collect()}
+    assert per_id == {1: 1, 2: 1, 3: 1}
+    got = {r["doc_id"]: r["cleaned"] for r in out.collect()}
+    assert got[1] == f"head {run} tail"  # never cut against its own grams
+    assert got[2] == "nothing shared at all here"
+    if point == "spandedup_cleaned_appended":
+        assert got[3] == f"pre {run} post"  # wave 1's grams were never indexed
+    else:
+        assert got[3] == "pre post"
+    idx = spark.read.parquet(index)
+    assert idx.count() == idx.distinct().count()
